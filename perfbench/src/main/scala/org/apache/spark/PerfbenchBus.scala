@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until its listener has seen every event
+  * posted so far; the listener bus is package-private to Spark. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
